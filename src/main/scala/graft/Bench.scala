@@ -44,23 +44,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // Engine session defaults (r21): the shuffle-writer choice
-    // (bypassMergeThreshold=1, guide §2.2 — see the rationale on
-    // SparkEntry.sessionDefaults) moved from a bench-only config into the
-    // engine defaults so production sessions get the same writer; the bench
-    // session applies the shared map, value unchanged from r20.
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-    val spark = SparkEntry.sessionDefaults.foldLeft(builder0) {
-      case (b, (k, v)) => b.config(k, v) }
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM (classloading, codegen, parquet reader) with one small
     // untimed query; per-query codegen is warmed by each query's own

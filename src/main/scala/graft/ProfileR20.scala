@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** r20 optimization-round profiling harness (measurement infra, same
   * standing as Bench/ScaleProbe): runs named queries and splits each
@@ -68,25 +67,16 @@ object ProfileR20 {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var builder = SparkEntry.sessionDefaults.foldLeft(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)) {
-      case (b, (k, v)) => b.config(k, v) }
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // A/B harness: SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2" applies extra
     // session confs so a candidate setting can be measured without a
     // code edit per experiment
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder = builder.config(k.trim, v.trim)
-      })
-    val spark = builder.getOrCreate()
+        k.trim -> v.trim
+      }.toMap
+    val spark = SparkEntry.session(cpus, "graft-profile", extra)
     spark.sparkContext.setLogLevel("WARN")
     val clock = new JobClock
     spark.sparkContext.addSparkListener(clock)

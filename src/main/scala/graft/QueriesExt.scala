@@ -336,15 +336,14 @@ object QueriesExt {
     * per-pair intersections, ~4x less data through the join), and
     * |hashed set| == |string set| absent 64-bit collisions (~10⁻¹² at
     * these set sizes), so every jaccard is unchanged — the q21 oracle
-    * stays cell-exact. normText is materialized in its own projection:
-    * inlining it into the charNgrams lambda would re-run the regex once
-    * per gram. The set itself builds via [[TextOps.hashedNgramSet]] —
-    * the native one-pass `tri_hashes` kernel under GraftExtensions.
+    * stays cell-exact. normText is materialized in its own projection
+    * and the set builds via [[TextOps.hashedNgramSet]] — the native
+    * one-pass `tri_hashes` kernel.
     */
   private def triFrame(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
       .select(col("doc_id"), TextOps.normText(col("text")).as("t"))
-      .select(col("doc_id"), TextOps.hashedNgramSet(s, col("t"), 3).as("g"))
+      .select(col("doc_id"), TextOps.hashedNgramSet(col("t"), 3).as("g"))
 
   /** (id1, id2, jaccard) between consecutive doc ids over a trigram
     * frame `d` — q21's body, shared with the q39/q50 edge builder.
@@ -4921,19 +4920,18 @@ object QueriesExt {
         .orderBy("nation", "date")
     }),
 
-    // RELAXED-FP INCREMENTAL FISHVOL (r18, r17 verdict task 5): the
-    // per-row Fisher fold streams under the OPT-IN relaxed tier
-    // (runIncremental(relaxedFp = true)) — the executor carries, per
-    // nation, the prefix product at the newest emitted row plus the
+    // INCREMENTAL FISHVOL (r18, r17 verdict task 5): the per-row Fisher
+    // fold streams on the incremental plan tier — the executor carries,
+    // per nation, the prefix product at the newest emitted row plus the
     // base average finalized the batch the base year closed, and each
     // batch's kernel continues the fold from the seed. Under the
     // native ProductAgg the seeded fold is the SAME multiplication
     // sequence as the whole-history run (bit-exact — StreamingSpec
     // pins it); the gate compares at round(,8) on the q219 integer
-    // grid, the tier's documented tolerance (the exp∘sum∘log fallback
-    // re-associates ≤1 ulp per batch). Emission holds until the
-    // nation's base year closes; after that every row is final on
-    // arrival — the emitted set is whole keys, not year prefixes.
+    // grid because the oracle's windowed product() need not associate
+    // the same way. Emission holds until the nation's base year
+    // closes; after that every row is final on arrival — the emitted
+    // set is whole keys, not year prefixes.
     "q222_fame_incremental_fishvol" -> ((s, dir) => {
       val base = scratch("q222")
       val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -4952,8 +4950,7 @@ object QueriesExt {
           |x = fishvol_rebase({a,b},{pa,pb},1996)""".stripMargin,
         s"$base/bronze", s"$base/result",
         partitionKeys = Seq("NATION"),
-        checkpointDir = Some(s"$base/ckpt"),
-        relaxedFp = true)
+        checkpointDir = Some(s"$base/ckpt"))
       try q.processAllAvailable() finally q.stop()
       s.read.parquet(s"$base/result")
         .select(col("NATION").as("nation"), col("DATE").as("date"),
@@ -4963,14 +4960,13 @@ object QueriesExt {
     }),
 
     // ANCHORED INCREMENTAL SHIFT_PCT (r19, r18 verdict task 4): the
-    // backward level reconstruction streams on the BIT-EXACT default
+    // backward level reconstruction streams bit-exact on the plan
     // tier when its date mask has a FIXED end — the anchor is then a
     // constant date, every factor a window row needs lives on rows
     // ≤ anchor, and the executor holds [start, anchor] back until the
     // key's frontier passes the anchor, flushing the window whole in
     // ONE in-frame computation. There is never a cross-batch fp fold
-    // (stronger than the verdict's requested relaxed-fp tier: the
-    // flush batch's suffix product multiplies exactly the
+    // (the flush batch's suffix product multiplies exactly the
     // whole-history factor sequence — rows outside the window
     // contribute null factors to both). The open/default-anchor form
     // keeps its named refusal: a moving anchor would revise emitted

@@ -262,20 +262,13 @@ object ScaleProbe {
     // runs = 0 would leave best = (Double.MaxValue, empty) and print
     // garbage wall_sec JSON (r13 ADVICE) — the probe needs >= 1 timed run
     require(runs >= 1, s"ScaleProbe needs runs >= 1, got $runs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkEntry.sessionDefaults.foldLeft(
-      SparkSession.builder()
-        .master(s"local[$cpus]")) { case (b, (k, v)) => b.config(k, v) }
-      // override to measure partition-count mitigations (e.g. the
-      // famebucketprobe spill row: more partitions = less join state
-      // per task, the knob a real cluster scales with keys)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // override to measure partition-count mitigations (e.g. the
+    // famebucketprobe spill row: more partitions = less join state
+    // per task, the knob a real cluster scales with keys)
+    val spark = SparkEntry.session(cpus, "graft-scaleprobe",
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+        .map("spark.sql.shuffle.partitions" -> _).toMap)
     spark.sparkContext.setLogLevel("WARN")
     val reps = sys.env.getOrElse("SPARK_GRAFT_FAME_REPS", "100").toInt
     val listener = new StageMetrics

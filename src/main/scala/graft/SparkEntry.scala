@@ -2,26 +2,42 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
-  /** Engine session defaults — the single source every main (Bench, Verify,
-    * Demo, DebugOne, ScaleProbe, PlanDump) applies to its builder and the
-    * recommended production configuration.
+  /** Engine session defaults — the recommended production configuration,
+    * applied by [[session]].
     *
     * `spark.shuffle.sort.bypassMergeThreshold=1` (guide §2.2): with R reduce
     * partitions the bypass-merge writer creates R files PER MAP TASK (then
     * mmaps, concatenates, deletes them); thread sampling in r20 showed
     * executor pools dominated by that file churn (~100-200 ms/task on KB of
     * data) whenever R <= the 200 default. The sort-based writer emits ONE
-    * file per map task regardless of R. At production partition counts
-    * (R > 200, any 100 TB layout) every shuffle already takes the sort path,
-    * so the setting is a provable no-op there (ScaleProbe sf10 rows in
-    * SCALING.md) and only rescues the small-R regime where per-file churn
-    * dominates. Lived only in Bench.scala in r20; homed here in r21 so the
-    * production session gets the same writer (VERDICT r20 item 2).
-    * Env-overridable: SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD.
+    * file per map task regardless of R. At R > 200 every shuffle already
+    * takes the sort path (the bypass writer only applies when R is at most
+    * the threshold), so the setting only changes the small-R regime where
+    * per-file churn dominates.
     */
   def sessionDefaults: Map[String, String] = Map(
-    "spark.shuffle.sort.bypassMergeThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "1"))
+    "spark.shuffle.sort.bypassMergeThreshold" -> "1")
+
+  /** The one session builder every main and the test suite use:
+    * `local[cores]` with shuffle partitions = cores, UTC, the graft
+    * extensions, parquet INT64 nanos read as longs, no UI, plus
+    * [[sessionDefaults]]. `conf` entries are applied last, so a caller
+    * can override any of these (ScaleProbe's partition count).
+    */
+  def session(cores: Int, appName: String,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val settings = Map(
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false") ++ sessionDefaults ++ conf
+    settings.foldLeft(
+      SparkSession.builder().master(s"local[$cores]").appName(appName)) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * a multi-operator FAME model over the monthly revenue series.
     */

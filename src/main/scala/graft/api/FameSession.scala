@@ -14,6 +14,7 @@ import graft.compile.ColumnCompiler.Ctx
 import graft.kernels.{BusinessCalendar, Convert, Indices, Nlrx, ShiftPct}
 import graft.parse.FameParser
 import graft.plan.{Bound, Scheduler}
+import graft.plans.GraftExtensions
 
 /** The wide time-series frame every FAME operation runs on — SURVEY §1.1:
   * one date column + one numeric column per series, plus any local-database
@@ -72,7 +73,7 @@ object FameSession {
     *                    frame alone. Empty (the default) = historical
     *                    behavior for every batch caller.
     * @param fishvolSeed per-fishvol-target carried state for the
-    *                    relaxed-fp incremental tier
+    *                    fishvol incremental tier
     *                    ([[Indices.fishvolRaw]] seed schema: prefix
     *                    product at the newest emitted row + the closed
     *                    base-year average, one row per key). Empty
@@ -85,7 +86,8 @@ object FameSession {
       businessCal: BusinessCalendar = BusinessCalendar.WeekdaysOnly,
       isoWeeks: Boolean = false,
       chainSeed: Map[String, DataFrame] = Map.empty,
-      fishvolSeed: Map[String, DataFrame] = Map.empty): SeriesFrame =
+      fishvolSeed: Map[String, DataFrame] = Map.empty): SeriesFrame = {
+    GraftExtensions.require(input.sparkSession)
     // date literals become plan literals during this synchronous driver-
     // thread call, so a dynamically-scoped parse mode is sound (nothing
     // re-parses after run returns)
@@ -93,6 +95,7 @@ object FameSession {
       runImpl(script, input, dateCol, partitionKeys, nlrx, dateofStub,
         businessCal, chainSeed, fishvolSeed)
     }
+  }
 
   private def runImpl(script: String, input: DataFrame, dateCol: String,
       partitionKeys: Seq[String],

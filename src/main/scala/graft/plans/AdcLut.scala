@@ -25,9 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * The codebook child must be a foldable `array<array<array<bigint>>>`
   * literal (m×ksub×sub — driver-sized like every ANN codebook). Null
   * semantics: null if the vector is null, its length isn't m·sub, or any
-  * element is null (serve-path grid vectors are never element-null; the
-  * fallback spelling nulls per-entry instead, a difference no caller
-  * observes).
+  * element is null (serve-path grid vectors are never element-null).
   */
 case class AdcLut(left: Expression, right: Expression)
     extends BinaryExpression {

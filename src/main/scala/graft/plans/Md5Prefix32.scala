@@ -15,10 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (spec-pinned against the builtin chain, and every md5 oracle
   * re-validates it end-to-end since Verify runs with GraftExtensions).
   *
-  * Registered as `md5_prefix32(str)` by [[GraftExtensions]];
-  * `Sampling.md5Prefix32` uses it when the session has the extensions
-  * and falls back to the builtin chain otherwise (the
-  * [[graft.ops.Similarity.dot]] pattern).
+  * Registered as `md5_prefix32(str)` by [[GraftExtensions]] and called
+  * by `Sampling.md5Prefix32`.
   */
 case class Md5Prefix32(child: Expression) extends UnaryExpression {
 

@@ -9,6 +9,7 @@ import graft.api.FameSession
 import graft.ast.{DateFilter, FameExpr, FameStmt, Frequency}
 import graft.kernels.{BusinessCalendar, Nlrx}
 import graft.parse.FameParser
+import graft.plans.GraftExtensions
 
 /** Micro-batched FAME ingest: the streaming twin of
   * [[graft.api.FameSession.run]], closing the batch/streaming asymmetry
@@ -115,6 +116,7 @@ object FameStream {
       businessCal: BusinessCalendar = BusinessCalendar.WeekdaysOnly,
       checkpointDir: Option[String] = None,
       mode: Mode = Auto): StreamingQuery = {
+    GraftExtensions.require(stream.sparkSession)
     val incremental = mode match {
       case Incremental => true
       case Snapshot    => false
@@ -122,12 +124,14 @@ object FameStream {
         // pin-bearing lead-FREE scripts emit exactly what the snapshot
         // emits (pins change the carry, not the output), so Auto routes
         // them incrementally; lead scripts (maxLead > 0) WITHHOLD the
-        // frontier rows, and chain scripts (r17) withhold the whole
-        // open year — different output contracts — so Auto keeps both
-        // on the snapshot path unless the caller opts in
+        // frontier rows, chain scripts (r17) withhold the whole open
+        // year and fishvol scripts every row before the base year
+        // closes — different output contracts — so Auto keeps them on
+        // the snapshot path unless the caller opts in
         incrementalPlan(script, partitionKeys.nonEmpty,
           Some(stream.columns.toSet))
-          .exists(p => p.maxLead == 0 && p.chains.isEmpty)
+          .exists(p => p.maxLead == 0 && p.chains.isEmpty &&
+            p.fishvols.isEmpty)
     }
     if (incremental)
       return runIncremental(stream, script, bronzeDir, resultDir, dateCol,
@@ -189,29 +193,26 @@ object FameStream {
     *  - [[incrementalReach]] (r16): + bounded LEADS, evaluated by
     *    hold-back emission (each key's newest maxLead rows pend).
     *  - [[incrementalPlan]] (r16, what [[runIncremental]] uses): + PINS
-    *    (open-ended-mask fixed reads carried permanently) and BUCKETED
-    *    down-conversions (span−1 hold + synthetic-anchor emission).
-    *    `run(Auto)` routes on this tier when maxLead == 0 (identical
-    *    output contract to the snapshot) and falls back to the snapshot
-    *    for lead/bucket scripts (hold-back trims the frontier — an
-    *    explicit opt-in).
+    *    (open-ended-mask fixed reads carried permanently), BUCKETED
+    *    down-conversions (span−1 hold + synthetic-anchor emission),
+    *    chain (year hold-back) and fishvol (base-year hold-back).
+    *    `run(Auto)` routes on this tier when maxLead == 0 and no chain
+    *    or fishvol holds rows back (identical output contract to the
+    *    snapshot) and falls back to the snapshot otherwise (hold-back
+    *    trims the frontier — an explicit opt-in).
     *
     * Still refused at EVERY tier, with the reasoning on record:
     * shift-pct (anti-causal — it recurses backward from the series END,
     * so every row's value changes whenever the end advances);
-    * fishvol ON THE BIT-EXACT TIERS (its cumulative product is a
-    * per-ROW fold — seeding it batch-wise re-associates the
-    * exp∘sum∘log fallback, and carrying the rows would be O(history);
-    * the r18 OPT-IN relaxed-fp tier accepts it, bit-exact under the
-    * native ProductAgg — see [[FishvolSpec]]); nlrx (a global
-    * smoother — every output depends on every input); up-conversions
-    * (interpolation reads the NEXT observation, unboundedly far
-    * ahead); open-START masks and plain-assign lookups (affected rows
-    * PRECEDE the read target — a forward read no carry policy can
-    * satisfy); and series-derived scalars (moving targets). CHAIN
+    * nlrx (a global smoother — every output depends on every input);
+    * up-conversions (interpolation reads the NEXT observation,
+    * unboundedly far ahead); open-START masks and plain-assign lookups
+    * (affected rows PRECEDE the read target — a forward read no carry
+    * policy can satisfy); and series-derived scalars (moving targets). CHAIN
     * (r17) is accepted at the PLAN tier only: its per-YEAR fold is
     * cheap to carry whole as derived state, and rows run under year
-    * hold-back (see [[ChainSpec]]).
+    * hold-back (see [[ChainSpec]]), and so is fishvol, under base-year
+    * hold-back (see [[FishvolSpec]]).
     *
     * Reach is TRANSITIVE through derived series: in
     * `a = pct(rev); b = pct(a)`, `b` at row t reads `a[t−1]` which
@@ -314,20 +315,17 @@ object FameStream {
   final case class ChainSpec(target: String, terms: Seq[(Int, String)],
       baseYear: Int)
 
-  /** A `fishvol_rebase` statement accepted on the RELAXED-FP
-    * incremental tier (`relaxedFp = true`): the executor carries, per
-    * key, the Fisher prefix product at the newest emitted row plus the
-    * closed base-year average ([[graft.kernels.Indices.fishvolRaw]]
-    * seed schema), and every batch's kernel run continues the fold
-    * from the seed. Under the sequential native ProductAgg the seeded
-    * fold performs the SAME multiplication sequence as the
-    * whole-history run (bit-exact by induction); under the
-    * exp∘sum∘log fallback the seed injection re-associates the fold —
-    * ≤ 1 ulp per batch boundary — which is why this tier is opt-in and
-    * the bit-exact default keeps refusing fishvol. Emission holds
-    * until the key's base year closes (before that the rebase
-    * denominator, hence EVERY index value, would still move); after
-    * the close each row's index is final on arrival.
+  /** A `fishvol_rebase` statement accepted on the incremental plan
+    * tier: the executor carries, per key, the Fisher prefix product at
+    * the newest emitted row plus the closed base-year average
+    * ([[graft.kernels.Indices.fishvolRaw]] seed schema), and every
+    * batch's kernel run continues the fold from the seed. Under the
+    * sequential native ProductAgg the seeded fold performs the SAME
+    * multiplication sequence as the whole-history run (bit-exact by
+    * induction). Emission holds until the key's base year closes
+    * (before that the rebase denominator, hence EVERY index value,
+    * would still move); after the close each row's index is final on
+    * arrival.
     */
   final case class FishvolSpec(target: String, volumes: Seq[String],
       prices: Seq[String], baseYear: Int)
@@ -341,10 +339,8 @@ object FameStream {
     * At the flush every window row is in frame and the kernel's suffix
     * product multiplies the SAME factor sequence the whole-history run
     * multiplies (rows outside the window contribute null factors,
-    * skipped by both), so emitted values are BIT-exact under either
-    * product spelling — there is never a cross-batch fp fold, which is
-    * why this statement lands on the bit-exact default tier even
-    * though fishvol's per-row forward fold needs the relaxed tier.
+    * skipped by both), so emitted values are BIT-exact — there is never
+    * a cross-batch fp fold.
     * State is the un-flushed window's raw rows: bounded by the FIXED
     * mask span (the chain pre-base-backlog argument), dropping to the
     * generic tail forever after the flush. The open/default-anchor
@@ -423,18 +419,16 @@ object FameStream {
     */
   def incrementalPlan(script: String,
       partitioned: Boolean = false,
-      inputColumns: Option[Set[String]] = None,
-      relaxedFp: Boolean = false)
+      inputColumns: Option[Set[String]] = None)
       : Either[String, IncrementalPlan] =
     reachAnalysis(script, partitioned, inputColumns, allowLeads = true,
-      allowPins = true, relaxedFp = relaxedFp)
+      allowPins = true)
 
   private def reachAnalysis(script: String,
       partitioned: Boolean,
       inputColumns: Option[Set[String]],
       allowLeads: Boolean,
-      allowPins: Boolean,
-      relaxedFp: Boolean = false): Either[String, IncrementalPlan] = {
+      allowPins: Boolean): Either[String, IncrementalPlan] = {
     import java.time.LocalDate
     import FameExpr._
     import FameStmt._
@@ -1187,30 +1181,18 @@ object FameStream {
                   Right(st.copy(assigned = st.assigned + target))
               }
             }
-          // fishvol is refused on the BIT-EXACT tiers: its cumulative
-          // product is a per-ROW left fold (raw_t = raw_{t-1} × link_t
-          // over the row-level window) — seeding it batch-wise with a
-          // carried scalar re-associates the exp∘sum∘log fallback fold,
-          // so batch outputs could not bit-equal the snapshot kernel
-          // there; carrying the rows instead would be O(history). Chain
-          // escapes this because its fold runs over the YEAR table
-          // (1 row per key-year), cheap enough to carry whole and
-          // recompute exactly. The RELAXED-FP tier (r18, opt-in via
-          // runIncremental(relaxedFp = true)) accepts it: the executor
+          // fishvol's cumulative product is a per-ROW left fold
+          // (raw_t = raw_{t-1} × link_t over the row-level window);
+          // carrying the rows would be O(history), so the executor
           // carries the per-key prefix product + closed base average
-          // and the seeded fold is bit-exact under the sequential
-          // native ProductAgg, ≤ 1 ulp per batch under the fallback
-          // (see [[FishvolSpec]]).
+          // instead, and the seeded fold is bit-exact under the
+          // sequential native ProductAgg (see [[FishvolSpec]]). It runs
+          // under base-year hold-back, so only the plan tier takes it.
           case FishvolAssign(t, vs, ps, baseYear) =>
             val srcs = (vs ++ ps).distinct
-            if (!relaxedFp)
-              Left(s"fishvol ($t) whole-series (per-row cumulative " +
-                "product cannot be seeded batch-wise without changing " +
-                "the fp fold association; opt in to the relaxed-fp " +
-                "tier with runIncremental(relaxedFp = true))")
-            else if (!(allowLeads && allowPins))
-              Left(s"fishvol ($t) whole-series (the relaxed-fp tier " +
-                "runs under base-year hold-back via runIncremental)")
+            if (!(allowLeads && allowPins))
+              Left(s"fishvol ($t) whole-series (runs under base-year " +
+                "hold-back via runIncremental)")
             else if (st.bucketed || chains.nonEmpty || shiftPcts.nonEmpty)
               Left(s"fishvol ($t) alongside a down-conversion, chain " +
                 "or shift_pct (hold-back emission cutoffs are not " +
@@ -1308,10 +1290,10 @@ object FameStream {
       partitionKeys: Seq[String] = Nil,
       nlrx: Nlrx = Nlrx.HpSmoother,
       businessCal: BusinessCalendar = BusinessCalendar.WeekdaysOnly,
-      checkpointDir: Option[String] = None,
-      relaxedFp: Boolean = false): StreamingQuery = {
+      checkpointDir: Option[String] = None): StreamingQuery = {
+    GraftExtensions.require(stream.sparkSession)
     val plan = incrementalPlan(script, partitionKeys.nonEmpty,
-        Some(stream.columns.toSet), relaxedFp = relaxedFp) match {
+        Some(stream.columns.toSet)) match {
       case Left(reason) => throw new IllegalArgumentException(
         s"script not incrementally evaluable: $reason (use FameStream.run)")
       case Right(p) => p
@@ -1455,7 +1437,7 @@ object FameStream {
         }
       val chainSeeds: Map[String, DataFrame] = plan.chains.flatMap(c =>
         readState(c.target).map(c.target -> _)).toMap
-      // fishvol state (relaxed-fp tier): per-key prefix product at the
+      // fishvol state: per-key prefix product at the
       // newest emitted row + the closed base average — versioned like
       // the chain state (replay of batch n re-reads v=n−1, idempotent)
       val fishSeeds: Map[String, DataFrame] = plan.fishvols.flatMap(f =>
@@ -1490,7 +1472,7 @@ object FameStream {
           val maxYr = max(year(col(dateU))).over(kw)
           year(col(dateU)) < maxYr && lit(maxBase) < maxYr
         }
-      // fishvol gate (relaxed-fp tier): a row emits once its key's BASE
+      // fishvol gate (base-year hold-back): a row emits once its key's BASE
       // year has closed — before that the rebase denominator, hence
       // every index value, would still move; AFTER it each row's raw
       // (hence index) is final on arrival, so unlike chain the row's
@@ -1689,7 +1671,7 @@ object FameStream {
             .parquet(s"$bronzeDir/_state/${c.target}/v=$batchId")
         }
       }
-      // finalize fishvol state (relaxed-fp tier): per key, the raw
+      // finalize fishvol state: per key, the raw
       // prefix product at the NEWEST EMITTED row (emitted ⇒ base year
       // closed ⇒ raw final) and the closed base average — recomputed
       // from the same [[Indices.fishvolRaw]] plan the kernel ran, so

@@ -98,6 +98,15 @@ class EngineSpec extends SparkSpec {
     assertSeq(column(out, "D"), Seq(None, Some(10.0), Some(-11.0)))
   }
 
+  test("a zero divisor yields null (FAME NC) for `/` and pct, not an " +
+      "ANSI DIVIDE_BY_ZERO") {
+    val in = frame(Seq("2020-01-01", "2020-02-01", "2020-03-01"),
+      "X" -> Seq(0, 5, 6))
+    val out = FameSession.run("freq m\np = pct(x)\nq = 1 / x", in).df
+    assertSeq(column(out, "P"), Seq(None, None, Some(20.0)))
+    assertSeq(column(out, "Q"), Seq(None, Some(0.2), Some(1.0 / 6)))
+  }
+
   test("pct of a shifted series (offset pushdown, no nested windows)") {
     val in = frame(Seq("2020-01-01", "2020-02-01", "2020-03-01"),
       "V" -> Seq(100, 110, 121))

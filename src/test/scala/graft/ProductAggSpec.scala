@@ -168,4 +168,30 @@ class ProductAggSpec extends SparkSpec {
     assert(graft.ops.Sampling.md5Second32(col("s")).toString
       .toLowerCase.contains("md5_second32"))
   }
+
+  test("a session without GraftExtensions fails at the call: FAME entry " +
+      "points name the missing extension, operator columns fail analysis " +
+      "naming the function") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // a fresh session state over the same context, with the graft
+    // functions dropped from ITS OWN registry (the shared session keeps
+    // them)
+    val bare = spark.newSession()
+    val registry = bare.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    registry.listFunction()
+      .filter(f => Set("product_agg", "md5_prefix32")(f.funcName))
+      .foreach(registry.dropFunction)
+    assert(!bare.catalog.functionExists("product_agg"))
+    assert(spark.catalog.functionExists("product_agg"))
+    val in = bare.sql("SELECT DATE'2020-01-01' AS DATE, 1.0D AS X")
+    val ex = intercept[IllegalStateException](
+      graft.api.FameSession.run("freq m\ny = x * 2", in))
+    assert(ex.getMessage.contains(
+      "spark.sql.extensions=graft.plans.GraftExtensions"))
+    val ae = intercept[org.apache.spark.sql.AnalysisException](
+      bare.range(1).select(graft.ops.Sampling.md5Prefix32(col("id")))
+        .collect())
+    assert(ae.getMessage.contains("md5_prefix32"))
+  }
 }

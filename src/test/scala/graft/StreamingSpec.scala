@@ -1527,36 +1527,45 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     def d(s: String) = java.sql.Date.valueOf(s)
-    val base = java.nio.file.Files.createTempDirectory("famecauto").toString
-    val script = """freq m
-                   |set x = $chain("a", "1996")""".stripMargin
     val batches = Seq(
       Seq((d("1995-01-01"), 4.0, 2.0), (d("1995-02-01"), 5.0, 3.0)),
       Seq((d("1996-01-01"), 6.0, 2.0), (d("1996-02-01"), 3.0, 4.0)))
-    val src = MemoryStream[(java.sql.Date, Double, Double)]
-    val df = src.toDF().toDF("DATE", "A", "PA")
-    val q = graft.streaming.FameStream.run(df, script,
-      s"$base/bronze", s"$base/result",
-      checkpointDir = Some(s"$base/ckpt"))
-    try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
-    finally q.stop()
-    // snapshot layout: flat gold overwrite, no versioned tail/state —
-    // and EVERY row present (the incremental form would withhold the
-    // open 1996 year)
-    assert(!new java.io.File(s"$base/bronze/_tail").exists(),
-      "chain script was routed incrementally by Auto")
-    assert(!new java.io.File(s"$base/result/batch=0").exists())
-    val got = spark.read.parquet(s"$base/result")
-      .select(col("DATE").cast("string"), col("X"))
-      .orderBy("DATE").collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSeq
-    val want = graft.api.FameSession.run(script,
-        batches.flatten.toDF("DATE", "A", "PA")).df
-      .select(col("DATE").cast("string"), col("X"))
-      .orderBy("DATE").collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSeq
-    assert(got == want)
-    assert(got.size == 4)
+    // fishvol holds every row back until its base year closes, so it is
+    // a different output contract too and must stay on the snapshot
+    // path, although the plan tier accepts it
+    val fishvol = """freq m
+                    |x = fishvol_rebase({a},{pa},1996)""".stripMargin
+    assert(graft.streaming.FameStream.incrementalPlan(fishvol,
+      inputColumns = Some(Set("DATE", "A", "PA"))).isRight)
+    val chain = """freq m
+                  |set x = $chain("a", "1996")""".stripMargin
+    Seq(chain, fishvol).foreach { script =>
+      val base = java.nio.file.Files.createTempDirectory("famecauto").toString
+      val src = MemoryStream[(java.sql.Date, Double, Double)]
+      val df = src.toDF().toDF("DATE", "A", "PA")
+      val q = graft.streaming.FameStream.run(df, script,
+        s"$base/bronze", s"$base/result",
+        checkpointDir = Some(s"$base/ckpt"))
+      try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      // snapshot layout: flat gold overwrite, no versioned tail/state —
+      // and EVERY row present (the incremental form would withhold rows
+      // until 1996, the open year and both base years, closes)
+      assert(!new java.io.File(s"$base/bronze/_tail").exists(),
+        s"script was routed incrementally by Auto: $script")
+      assert(!new java.io.File(s"$base/result/batch=0").exists())
+      val got = spark.read.parquet(s"$base/result")
+        .select(col("DATE").cast("string"), col("X"))
+        .orderBy("DATE").collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+      val want = graft.api.FameSession.run(script,
+          batches.flatten.toDF("DATE", "A", "PA")).df
+        .select(col("DATE").cast("string"), col("X"))
+        .orderBy("DATE").collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+      assert(got == want)
+      assert(got.size == 4)
+    }
   }
 
   test("FameStream.run auto-dispatch: eligible scripts take the " +
@@ -2448,7 +2457,7 @@ class StreamingSpec extends SparkSpec {
           Seq((1, "A"), (-1, "B")), 1997)))))
     // named-reason fences: downstream reads of the sealed index, source
     // reassignment after the chain, chain+convert composition, a lagged
-    // source, and fishvol's per-row fold
+    // source, and chain+fishvol composition
     assert(FameStream.incrementalPlan(
       script + "\nz = x * 2", inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(
@@ -2484,7 +2493,7 @@ class StreamingSpec extends SparkSpec {
         |pc = pa[t-1]""".stripMargin,
       inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(
-      "freq m\nx = fishvol_rebase({a},{pa},1996)",
+      script + "\ny = fishvol_rebase({a},{pa},1996)",
       inputColumns = cols).isLeft)
     // forward references through ORDINARY statements are refused at
     // every tier (r17 find: `b = a[t-1]; a = pct(rev)` used to verdict
@@ -2573,7 +2582,7 @@ class StreamingSpec extends SparkSpec {
       perBatchEarly.toString)
   }
 
-  test("relaxed-fp incremental fishvol (r18): opt-in tier streams the " +
+  test("incremental fishvol (r18): the plan tier streams the " +
       "per-row Fisher fold under BASE-YEAR hold-back — the carried " +
       "prefix product continues the fold, the closed base average " +
       "rides in state, cells bit-equal the whole-history run (the " +
@@ -2587,41 +2596,39 @@ class StreamingSpec extends SparkSpec {
         |mom = pct(a)
         |x = fishvol_rebase({a,b},{pa,pb},1996)""".stripMargin
     val cols = Some(Set("DATE", "K", "A", "PA", "B", "PB"))
-    // DEFAULT stays refused at every tier, message naming the flag
-    assert(FameStream.incrementalPlan(script, partitioned = true,
-      inputColumns = cols).left.exists(_.contains("relaxedFp")))
+    // the plan tier accepts with a FishvolSpec and maxLag 1 (the
+    // Fisher link reads each source at t−1); the lag-only eligibility
+    // tier refuses (base-year hold-back needs runIncremental)
     assert(FameStream.incrementalEligibility(script,
       inputColumns = cols).isLeft)
-    // the relaxed tier accepts with a FishvolSpec and maxLag 1 (the
-    // Fisher link reads each source at t−1)
     assert(FameStream.incrementalPlan(script, partitioned = true,
-      inputColumns = cols, relaxedFp = true) ==
+      inputColumns = cols) ==
       Right(FameStream.IncrementalPlan(0, 1, Nil, bucketed = false,
         fishvols = Seq(FameStream.FishvolSpec("X", Seq("A", "B"),
           Seq("PA", "PB"), 1996)))))
     // fences: downstream reads of the sealed index, source
     // reassignment, composition with convert/chain, lead-bearing source
     assert(FameStream.incrementalPlan(script + "\nz = x * 2",
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(script + "\na = a * 2",
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(
       script + "\nv = convert(a, q, discrete, sum)",
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(
       script + "\nset y = $chain(\"a\", \"1996\")",
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(
       """freq m
         |c = a[t+1]
         |x = fishvol_rebase({c},{pa},1996)""".stripMargin,
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     // a LAGGED source folds its reach into maxLag (1 + 1)
     assert(FameStream.incrementalPlan(
       """freq m
         |c = a[t-1]
         |x = fishvol_rebase({c},{pa},1996)""".stripMargin,
-      inputColumns = cols, relaxedFp = true) ==
+      inputColumns = cols) ==
       Right(FameStream.IncrementalPlan(0, 2, Nil, bucketed = false,
         fishvols = Seq(FameStream.FishvolSpec("X", Seq("C"),
           Seq("PA"), 1996)))))
@@ -2644,7 +2651,7 @@ class StreamingSpec extends SparkSpec {
     val df = src.toDF().toDF("K", "DATE", "A", "PA", "B", "PB")
     val q = FameStream.runIncremental(df, script,
       s"$dir/bronze", s"$dir/result", partitionKeys = Seq("K"),
-      checkpointDir = Some(s"$dir/ckpt"), relaxedFp = true)
+      checkpointDir = Some(s"$dir/ckpt"))
     try Seq(0 until 14, 14 until 34, 34 until 42).foreach { r =>
       src.addData(rows(r): _*); q.processAllAvailable()
     } finally q.stop()
@@ -2706,8 +2713,8 @@ class StreamingSpec extends SparkSpec {
     // the reach tier refuses (anchor hold-back needs runIncremental)
     assert(FameStream.incrementalEligibility(script,
       inputColumns = cols).isLeft)
-    // the DEFAULT plan tier accepts — no relaxedFp needed: the flush is
-    // a single in-frame computation, never a cross-batch fold
+    // the plan tier accepts: the flush is a single in-frame
+    // computation, never a cross-batch fold
     assert(FameStream.incrementalPlan(script, partitioned = true,
       inputColumns = cols) ==
       Right(FameStream.IncrementalPlan(0, 1, Nil, bucketed = false,
@@ -3015,7 +3022,7 @@ class StreamingSpec extends SparkSpec {
         |y = fishvol_rebase({b},{pb},1996)""".stripMargin
     val cols = Some(Set("DATE", "K", "A", "PA", "B", "PB"))
     assert(FameStream.incrementalPlan(script, partitioned = true,
-      inputColumns = cols, relaxedFp = true) ==
+      inputColumns = cols) ==
       Right(FameStream.IncrementalPlan(0, 1, Nil, bucketed = false,
         fishvols = Seq(
           FameStream.FishvolSpec("X", Seq("A"), Seq("PA"), 1995),
@@ -3042,7 +3049,7 @@ class StreamingSpec extends SparkSpec {
     val df = src.toDF().toDF("K", "DATE", "A", "PA", "B", "PB")
     val q = FameStream.runIncremental(df, script,
       s"$dir/bronze", s"$dir/result", partitionKeys = Seq("K"),
-      checkpointDir = Some(s"$dir/ckpt"), relaxedFp = true)
+      checkpointDir = Some(s"$dir/ckpt"))
     try Seq(0 until 14, 14 until 34, 34 until 42).foreach { r =>
       src.addData(rows(r): _*); q.processAllAvailable()
     } finally q.stop()
@@ -3100,7 +3107,7 @@ class StreamingSpec extends SparkSpec {
     def start() = FameStream.runIncremental(
       spark.readStream.schema(schema).parquet(s"$base/src"), script,
       s"$base/bronze", s"$base/result", partitionKeys = Seq("K"),
-      checkpointDir = Some(s"$base/ckpt"), relaxedFp = true)
+      checkpointDir = Some(s"$base/ckpt"))
     val q1 = start()
     try { q1.processAllAvailable(); chunk(14 until 34)
       q1.processAllAvailable() } finally q1.stop()
