@@ -10541,7 +10541,7 @@ object QueriesExt {
     // sums attached at the quarter-start anchor (the q11 join shape).
     // The frame has per-nation month gaps, so quarters whose anchor
     // month is missing surface as SYNTHETIC rows (the engine's convert
-    // bridge full-outer-joins the quarterly grid in BEFORE the leveled
+    // bridge adds the quarterly anchors in BEFORE the leveled
     // assigns — reference semantics — so pct's physical lag also runs
     // over the joined grid: growth is computed over g, not m). Emitted
     // set: input rows minus each nation's newest 2 (the bucket hold),

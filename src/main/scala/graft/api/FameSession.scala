@@ -3,6 +3,7 @@ package graft.api
 import java.time.LocalDate
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -37,6 +38,16 @@ final case class SeriesFrame(
   * parse → bind state → Kahn levels → per-level `withColumn` batches, with
   * the convert frequency bridge first (`fame2py_converter.py:282-415`) and
   * kernels (chain / fishvol / nlrx / shift-pct) as frame→frame ops.
+  *
+  * Keyed execution is KEY-LOCAL: a keyed script with any key-scoped
+  * operator repartitions its frame by the keys once, and the operators
+  * this object builds keep that clustering — ordered windows partition by
+  * the keys, the down-convert bridge is a window over (keys, period)
+  * ([[Convert.bridgeDown]]), and fixed-date lookups and per-key scalars
+  * are unordered key windows. So a keyed script of lags, lookups,
+  * scalars and down-converts plans exactly one shuffle. The kernels that
+  * still join — `$chain` on (keys, year), nlrx on (key, DATE) and the
+  * keyed up-convert's calendar join — add their own exchanges.
   */
 object FameSession {
 
@@ -111,11 +122,28 @@ object FameSession {
     // analysis cost grows quadratically on wide (hundreds-of-series) frames
     // qcol: a dotted input column must uppercase-normalize too, not fail
     // analysis as struct access (r18 — same class as the q220 find)
-    val df0 = input.select(input.columns.toIndexedSeq
+    val upper = input.select(input.columns.toIndexedSeq
       .map(c => ColumnCompiler.qcol(c).as(c.toUpperCase)): _*)
     val stmts = FameParser.parseScript(script)
-    val preExisting = df0.columns.toSet
+    val preExisting = upper.columns.toSet
     val bounds = Scheduler.bind(stmts, preExisting)
+
+    // KEY-LOCAL execution (SURVEY §4): a keyed script with any key-scoped
+    // operator clusters its frame ONCE by the keys. Every operator below
+    // then stays inside a key's partition — ordered windows, the
+    // down-convert bridge, lookups and per-key scalars are windows over
+    // the keys (or keys + period) and add no exchange. A row-local keyed
+    // script (`z = x + y`) keeps its input partitioning: no shuffle.
+    val df0 =
+      if (partitionKeys.nonEmpty && stmts.exists(keyScoped(_, stmts)))
+        upper.repartition(partitionKeys.map(col): _*)
+      else upper
+    val keyWin = Window.partitionBy(partitionKeys.map(col): _*)
+    // a key join never matched a null key; the windows below group null
+    // keys together, so key-constant columns are nulled on such rows
+    val keysPresent: Column =
+      partitionKeys.map(k => col(k).isNotNull).reduceOption(_ && _)
+        .getOrElse(lit(true))
 
     var cur = df0
     var scalars = Map.empty[String, Any]
@@ -139,13 +167,15 @@ object FameSession {
       * key's OWN value at the date — the unkeyed driver literal is one
       * arbitrary row of the multi-entity frame (frame-dependent). Walk
       * the expression for lookup sites and materialize each distinct
-      * (series, date) as a key-constant column: filter the frame to the
-      * date, group by the keys, left-join back (one #keys-row join per
-      * site, broadcast-sized at any scale). The compiler then reads the
-      * column instead of inlining a literal (Ctx.lookupCols). Entries
-      * invalidate when their series is reassigned — a later lookup of
-      * the new definition re-materializes under a fresh name. The
-      * `__LKP_` columns are dropped from the final frame.
+      * (series, date) as a key-constant column: an unordered window over
+      * the keys takes the first non-null value at the date, so the
+      * key-clustered frame needs no join and no exchange. A row with a
+      * null key gets null (a key join never matches null). The compiler
+      * then reads the column instead of inlining a literal
+      * (Ctx.lookupCols). Entries invalidate when their series is
+      * reassigned — a later lookup of the new definition re-materializes
+      * under a fresh name. The `__LKP_` columns are dropped from the
+      * final frame.
       */
     def materializeKeyedLookups(e: FameExpr): Unit = {
       if (partitionKeys.isEmpty) return
@@ -155,11 +185,9 @@ object FameSession {
             cur.columns.contains(series)) {
           lookupSeq += 1
           val name = s"__LKP_$lookupSeq"
-          val lk = cur
-            .where(col(dateCol) === lit(java.sql.Date.valueOf(d)))
-            .groupBy(partitionKeys.map(col): _*)
-            .agg(first(ColumnCompiler.qcol(series)).as(name))
-          cur = cur.join(lk, partitionKeys, "left")
+          cur = cur.withColumn(name, when(keysPresent,
+            first(when(col(dateCol) === lit(java.sql.Date.valueOf(d)),
+              ColumnCompiler.qcol(series)), ignoreNulls = true).over(keyWin)))
           lookupCols += (series, d) -> name
         }
       }
@@ -200,47 +228,65 @@ object FameSession {
     // start_by) batching (`fame2py_converter.py:291-299`) plus the
     // effective source frequency: the statement's as_freq override when
     // given, else the session frequency at that statement
-    converts.groupBy { case (b, c) =>
+    val groups = converts.groupBy { case (b, c) =>
       (c.freq, c.technique, c.observed, c.startBy, c.asFreq.orElse(b.freq)) }
       .toSeq.sortBy(_._2.head._1.order)
-      .foreach { case ((tgtFreq, technique, observed, _, srcFreqOpt), group) =>
+      .map { case ((tgtFreq, technique, observed, _, srcFreqOpt), group) =>
         val srcFreq = srcFreqOpt.orElse(sessionFreq).getOrElse(Frequency.Monthly)
-        val srcCols = group.map(_._2.source).distinct
+        (tgtFreq, technique, observed, srcFreq, group)
+      }
+    // KEYED down-converts bridge in-frame (Convert.bridgeDown): window
+    // aggregates over (keys, period) on the clustered frame instead of a
+    // full outer join on (keys, DATE), whose coalesced join key dropped
+    // the key clustering. Input rows carry a marker so a later group
+    // tells them from rows an earlier bridge synthesized.
+    def inFrameGroup(src: Frequency, tgt: Frequency) =
+      partitionKeys.nonEmpty && Convert.isDown(src, tgt)
+    val bridgeReal = "__BRIDGE_REAL"
+    val inFrame = groups.exists { case (tgt, _, _, src, _) =>
+      inFrameGroup(src, tgt) }
+    if (inFrame) cur = cur.withColumn(bridgeReal, lit(true))
+    groups.foreach { case (tgtFreq, technique, observed, srcFreq, group) =>
+      val srcCols = group.map(_._2.source).distinct
+      if (inFrameGroup(srcFreq, tgtFreq))
+        cur = Convert.bridgeDown(
+          cur.withColumn(dateCol, to_date(col(dateCol))), dateCol, srcCols,
+          srcFreq, tgtFreq, observed, partitionKeys, bridgeReal)
+      else {
         val projected = bridgeBase.select(
           (partitionKeys.map(col) :+ col(dateCol)) ++
             srcCols.map(ColumnCompiler.qcol): _*)
         val converted0 =
           if (Convert.isDown(srcFreq, tgtFreq))
-            Convert.down(projected, dateCol, srcCols, srcFreq, tgtFreq, observed,
-              partitionKeys)
+            Convert.down(projected, dateCol, srcCols, srcFreq, tgtFreq,
+              observed, partitionKeys)
           else
-            Convert.up(projected, dateCol, srcCols, srcFreq, tgtFreq, technique,
-              partitionKeys, businessCal)
+            Convert.up(projected, dateCol, srcCols, srcFreq, tgtFreq,
+              technique, partitionKeys, businessCal)
         // rename to the suffix contract: A → A_QTRLY etc. (SURVEY §2.5)
         val converted = srcCols.foldLeft(converted0)(
           (d, c) => d.withColumnRenamed(c, c + tgtFreq.suffix))
         // full outer join back on DATE (`fame2py_converter.py:409`).
-        // KEYED execution hints SHUFFLE_HASH with the converted side as
-        // build: the converted frame is the bucket-aggregated grid —
-        // 1/span of the fact rows, per-task bounded — and a shuffled
-        // HASH join needs no sort on either side, where the default
-        // sort-merge join's two sort-heavy exchanges over the fact
-        // frame were the measured spill driver on the keyed streaming
-        // path (SCALING.md famebucketprobe: 1.22 GB external-sort
-        // paging per run at 250k keys on an 8 GiB JVM, partition-count
-        // independent). Keyless converts keep the default plan: their
-        // converted side is |buckets| rows and AQE's broadcast choice
-        // already beats any shuffle.
+        // A KEYED (up-convert) join hints SHUFFLE_HASH with the converted
+        // side as build: a shuffled HASH join needs no sort on either
+        // side, where the default sort-merge join's two sort-heavy
+        // exchanges over the fact frame were the measured spill source
+        // of the keyed join bridge (SCALING.md famebucketprobe). Keyless
+        // converts keep the default plan: their converted side is
+        // |buckets| rows and AQE's broadcast choice already beats any
+        // shuffle.
         val convJoin =
           if (partitionKeys.nonEmpty) converted.hint("SHUFFLE_HASH")
           else converted
         cur = cur
           .withColumn(dateCol, to_date(col(dateCol)))
           .join(convJoin, partitionKeys :+ dateCol, "full")
-        group.foreach { case (_, c) =>
-          refMap += c.target -> (c.source + tgtFreq.suffix)
-        }
       }
+      group.foreach { case (_, c) =>
+        refMap += c.target -> (c.source + tgtFreq.suffix)
+      }
+    }
+    if (inFrame) cur = cur.drop(bridgeReal)
 
     // ------------------------------------------------------ leveled execution
     val levels = Scheduler.levels(rest, preExisting)
@@ -292,16 +338,15 @@ object FameSession {
               materializeKeyedLookups(e)
               val compiled = ColumnCompiler.compile(e, ctx)
               val tmp = s"__SCL_$name"
-              val vals = cur
-                .select((partitionKeys.map(col) :+ col(dateCol) :+
-                  compiled.as(tmp)): _*)
-                .groupBy(partitionKeys.map(col): _*)
-                .agg(min_by(col(tmp), col(dateCol)).as(tmp))
-              // reassignment: drop the stale __SCL_ column first, or the
-              // re-join leaves two columns named tmp and later Ref reads
-              // resolve AMBIGUOUS_REFERENCE (vals above already read the
-              // OLD value, so an RHS referencing the scalar still sees it)
-              cur = cur.drop(tmp).join(vals, partitionKeys, "left")
+              // the RHS is materialized first (it may hold windows of its
+              // own — SURVEY §3 forbids nesting them), then an unordered
+              // key window takes its earliest row. A reassignment
+              // replaces tmp in place; the RHS column above already read
+              // the OLD value, so an RHS referencing the scalar sees it.
+              cur = cur.withColumn("__SCL_RHS", compiled)
+                .withColumn(tmp, when(keysPresent,
+                  min_by(col("__SCL_RHS"), col(dateCol)).over(keyWin)))
+                .drop("__SCL_RHS")
               refMap += name -> tmp
               scalars -= name
             } else {
@@ -393,6 +438,40 @@ object FameSession {
 
     SeriesFrame(cur, dateCol, sessionFreq, partitionKeys, dbs)
   }
+
+  /** Whether a statement, run keyed, reads other rows of its key through
+    * an operator the key clustering serves: a convert, chain, fishvol or
+    * shift-pct kernel, a per-key scalar, or an expression with a time
+    * shift, a whole-series function or a lookup. Only scripts with such a
+    * statement cluster the frame by key (see `runImpl`). nlrx does not
+    * count: its solve groups by a derived string key, so a key clustering
+    * would only add a shuffle in front of its own.
+    */
+  private def keyScoped(s: FameStmt, script: Seq[FameStmt]): Boolean = {
+    def expr(e: FameExpr): Boolean = e match {
+      case TimeShift(_, k)  => k != 0
+      case DateLookup(_, _) | DynLookup(_, _) | ChainCall(_, _) => true
+      case Call(n, args)    => windowCalls(n) || args.exists(expr)
+      case Bin(_, l, r)     => expr(l) || expr(r)
+      case Un(_, a)         => expr(a)
+      case Cond(c, t, f)    => expr(c) || expr(t) || expr(f)
+      case _                => false
+    }
+    s match {
+      case Assign(_, e, _, _)   => expr(e)
+      case PointInTime(_, _, e) => expr(e)
+      // a scalar no plan-time fold resolves is a per-key window
+      case ScalarAssign(_, e)   => staticFold(e, script.collect {
+        case ScalarAssign(n, _) => n -> (0.0: Any) }.toMap).isEmpty
+      case _: ConvertAssign | _: ChainAssign | _: FishvolAssign |
+           _: ShiftPctAssign => true
+      case _                    => false
+    }
+  }
+
+  /** FAME functions that compile to windows over the key (ColumnCompiler). */
+  private val windowCalls =
+    Set("pct", "diff", "firstvalue", "lastvalue", "ave", "dateof")
 
   private def toLocalDate(v: Any): LocalDate = v match {
     case d: java.sql.Date => d.toLocalDate

@@ -18,7 +18,10 @@ import graft.ast.Frequency
   * Spark realization:
   *  - **Downsample** = `groupBy(date_trunc(unit, DATE))` + one aggregate per
   *    source column chosen by `observed` — a single shuffle for the whole
-  *    group, map-side partial aggregation free from Catalyst.
+  *    group, map-side partial aggregation free from Catalyst ([[down]]).
+  *    Keyed sessions bridge in-frame instead ([[bridgeDown]]): the same
+  *    aggregates as windows over (keys, period start), so a frame
+  *    clustered by the keys needs no exchange and no join back.
   *  - **Upsample** = build the target calendar once per group
   *    (`sequence` + `explode` — parallelized by Spark, no driver loop), left
   *    join the sources, then per `technique`: constant/discrete = forward
@@ -86,21 +89,24 @@ object Convert {
     * `annualized` unchecked to its closed kernel, so this implements
     * the published semantics rather than an alias. `formula` (also
     * closed in the reference) takes the period average (documented
-    * choice).
+    * choice). `over` wraps the aggregate itself (a window, for the
+    * in-frame bridge), so the annualized rescale stays outside it.
     */
   def observedAgg(c: Column, dateCol: Column, observed: String,
-      srcPpy: Double, targetPpy: Double): Column =
+      srcPpy: Double, targetPpy: Double,
+      over: Column => Column = identity): Column =
     observed match {
-      case "average" | "averaged" | "formula" => avg(c)
-      case "annualized"             => sum(c) / lit(srcPpy) * lit(targetPpy)
-      case "sum" | "summed"         => sum(c)
-      case "first" | "beginning"    => min_by(c, when(c.isNotNull, dateCol))
-      case "last" | "end" | "ending"=> max_by(c, when(c.isNotNull, dateCol))
-      case "high"                   => max(c)
-      case "low"                    => min(c)
+      case "average" | "averaged" | "formula" => over(avg(c))
+      case "annualized"             =>
+        over(sum(c)) / lit(srcPpy) * lit(targetPpy)
+      case "sum" | "summed"         => over(sum(c))
+      case "first" | "beginning"    => over(min_by(c, when(c.isNotNull, dateCol)))
+      case "last" | "end" | "ending"=> over(max_by(c, when(c.isNotNull, dateCol)))
+      case "high"                   => over(max(c))
+      case "low"                    => over(min(c))
       // the reference passes unrecognized observed values to its closed
       // kernel unchecked; we default to the period average (documented)
-      case _                        => avg(c)
+      case _                        => over(avg(c))
     }
 
   /** Downsample `cols` of `df` from `src` to `target` frequency.
@@ -118,6 +124,65 @@ object Convert {
       observedAgg(qcol(cols.head), col(dateCol), observed, srcPpy, tgtPpy).as(cols.head),
       cols.tail.map(c =>
         observedAgg(qcol(c), col(dateCol), observed, srcPpy, tgtPpy).as(c)): _*)
+  }
+
+  /** Key-local downsample bridge: the keyed form of [[down]] followed by
+    * the full outer join back on `keys :+ dateCol`, computed inside the
+    * frame so a frame clustered by `keys` stays clustered (no exchange).
+    *
+    * Adds `cols.map(_ + target.suffix)` with the same rows and values the
+    * join produced, from window aggregates over `(keys, periodStart)`
+    * ordered by date (each period's `observed` statistic sums in date
+    * order):
+    *  - a row whose keys are all non-null and whose date is its period's
+    *    anchor gets the period value (the rows the join's equality
+    *    matched); every other row gets null;
+    *  - a period with input rows but no matched row gains ONE synthetic
+    *    row (the join's right-only row): the group's first row is
+    *    exploded twice, and the copy carries the group's keys, DATE =
+    *    anchor, the period values and null in every other column.
+    *
+    * `real` names a column that is non-null exactly on rows of the
+    * original input: rows an earlier bridge synthesized (null there) do
+    * not open a period on their own, as the join's aggregate side read
+    * only the input. Output columns: keys, dateCol, the remaining input
+    * columns in order, then the converted columns — the join's layout.
+    */
+  def bridgeDown(df: DataFrame, dateCol: String, cols: Seq[String],
+      src: Frequency, target: Frequency, observed: String,
+      keys: Seq[String], real: String): DataFrame = {
+    val (srcPpy, tgtPpy) = (periodsPerYear(src), periodsPerYear(target))
+    val date = col(dateCol)
+    val period = Window.partitionBy((keys.map(col) :+ col("__BP")): _*)
+      .orderBy(dateCol)
+    val whole = period.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    val matched = keys.foldLeft(coalesce(date === col("__BP"), lit(false)))(
+      (m, k) => m && col(k).isNotNull)
+    val outCols = cols.map(_ + target.suffix)
+    val staged = df
+      .withColumn("__BP", periodStart(date, target))
+      .withColumns(scala.collection.immutable.ListMap(
+        cols.zip(outCols).map { case (c, o) => s"__BA_$o" ->
+          observedAgg(qcol(c), date, observed, srcPpy, tgtPpy, _.over(whole))
+        } ++ Seq(
+          "__BMATCH" -> max(matched).over(whole),
+          "__BREAL"  -> max(col(real).isNotNull).over(whole),
+          "__BRN"    -> row_number().over(period)): _*))
+    val synth = col("__BREAL") && !col("__BMATCH") && col("__BRN") === 1
+    val exploded = staged.withColumn("__BX",
+      explode(when(synth, array(lit(false), lit(true)))
+        .otherwise(array(lit(false)))))
+    // names resolve case-insensitively, as the join's USING columns did
+    val placed = (keys :+ dateCol).map(_.toUpperCase).toSet
+    val rest = df.columns.toSeq.filterNot(c => placed(c.toUpperCase))
+      .filterNot(outCols.contains)
+    exploded.select(
+      (keys.map(col) :+
+        when(col("__BX"), col("__BP")).otherwise(date).as(dateCol)) ++
+      rest.map(c => when(!col("__BX"), qcol(c)).as(c)) ++
+      outCols.map(o =>
+        when(col("__BX") || matched, col(s"__BA_$o")).as(o)): _*)
   }
 
   /** Fine-calendar step for a target frequency. */

@@ -109,13 +109,15 @@ object Indices {
         lit(s.toDouble) * price(i) * qty(i)
       }.reduce(_ + _)
 
-    val lasp = dot(i => lagc(s"__p$i"), i => col(s"__q$i")) /
-               dot(i => lagc(s"__p$i"), i => lagc(s"__q$i"))
-    val paas = dot(i => col(s"__p$i"), i => col(s"__q$i")) /
-               dot(i => col(s"__p$i"), i => lagc(s"__q$i"))
-    // first-year link (lag null) and degenerate negative products (signed
-    // baskets can net below zero) both collapse to a unit link — sqrt(NaN)
-    // would otherwise poison the cumulative product
+    // a zero denominator (zero prices or quantity sums) gives NC
+    // (try_divide; plain `/` throws DIVIDE_BY_ZERO under ANSI)
+    val lasp = try_divide(dot(i => lagc(s"__p$i"), i => col(s"__q$i")),
+                          dot(i => lagc(s"__p$i"), i => lagc(s"__q$i")))
+    val paas = try_divide(dot(i => col(s"__p$i"), i => col(s"__q$i")),
+                          dot(i => col(s"__p$i"), i => lagc(s"__q$i")))
+    // first-year link (lag null), NC links and degenerate negative
+    // products (signed baskets can net below zero) all collapse to a unit
+    // link — sqrt(NaN) would otherwise poison the cumulative product
     val lp = lasp * paas
     val fisher = coalesce(sqrt(when(lp > 0, lp)), lit(1.0))
 
@@ -199,8 +201,10 @@ object Indices {
     val cur  = (c: String) => qcol(c)
     val prev = (c: String) => lag(qcol(c), 1).over(w)
 
-    val lasp = dot(prev, cur) / dot(prev, prev)
-    val paas = dot(cur, cur) / dot(cur, prev)
+    // NC on a zero denominator, collapsing to a unit link like a lagless
+    // first row (try_divide; plain `/` throws DIVIDE_BY_ZERO under ANSI)
+    val lasp = try_divide(dot(prev, cur), dot(prev, prev))
+    val paas = try_divide(dot(cur, cur), dot(cur, prev))
     val lp = lasp * paas
     val link = coalesce(sqrt(when(lp > 0, lp)), lit(1.0))
 

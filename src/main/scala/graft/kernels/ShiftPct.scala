@@ -49,13 +49,16 @@ object ShiftPct {
     val inRange = startCond && col(dateCol) <= anchorLit
 
     // growth factor f_t = 1 + pct(p)_t / 100 = p_t / p_{t-1}; suffix
-    // product of its positive values via the native ProductAgg
+    // product of its positive values via the native ProductAgg. A zero
+    // p_{t-1} gives NC (try_divide; plain `/` throws DIVIDE_BY_ZERO under
+    // ANSI), and like any non-positive or null factor it is skipped
     pairs.foldLeft(df) { case (acc, (tgt, p)) =>
       // qcol: dotted target/pct series names must read literally, not as
       // struct access (same class as the r17 q220 dotted-name find)
       val stepped = acc
         .withColumn("__f",
-          when(col(dateCol) <= anchorLit, qcol(p) / lag(qcol(p), 1).over(w)))
+          when(col(dateCol) <= anchorLit,
+            try_divide(qcol(p), lag(qcol(p), 1).over(w))))
         .withColumn("__anchor",
           max(when(col(dateCol) === anchorLit, qcol(tgt))).over(everything))
       val suffixProduct = coalesce(call_function("product_agg",

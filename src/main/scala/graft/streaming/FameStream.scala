@@ -44,21 +44,6 @@ import graft.plans.GraftExtensions
   */
 object FameStream {
 
-  /** Small daemon pool for the per-batch independent writes (emit,
-    * carry, kernel states) — see the `parallel` helper in
-    * [[runIncremental]]. 4 threads: a batch has at most ~4 independent
-    * writes, and more in flight would only fight for executor slots.
-    */
-  private lazy val batchWritePool =
-    java.util.concurrent.Executors.newFixedThreadPool(4,
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"fame-batch-write-${n.incrementAndGet()}")
-          t.setDaemon(true); t
-        }
-      })
-
   /** Execution mode for [[run]]: `Auto` (default) consults
     * [[incrementalEligibility]] and routes forward-only scripts to the
     * O(batch) incremental evaluator, everything else to the O(history)
@@ -292,8 +277,8 @@ object FameStream {
     *
     * `bucketed` marks a script with at least one DOWN-conversion
     * (`convert(src, coarser, …)`): the executor then also emits the
-    * SYNTHETIC bucket-anchor rows the convert bridge's full-outer join
-    * creates for buckets whose anchor date has no input row, gated by
+    * SYNTHETIC bucket-anchor rows the convert bridge creates for
+    * buckets whose anchor date has no input row, gated by
     * per-key emission cutoffs (once per anchor, only after the bucket
     * closes), and carries one extra row per key so the previous cutoff
     * is always recoverable from the carry.
@@ -1032,7 +1017,7 @@ object FameStream {
           // started; nondecreasing ingest forbids stragglers). Each
           // bucket row reads the source's own recorded interval, which
           // rides on top. Anchors with no input row at the anchor date
-          // (sparse frames) surface as synthetic full-outer-join rows —
+          // (sparse frames) surface as synthetic bridge rows —
           // the `bucketed` flag makes runIncremental emit those by
           // per-key date cutoffs.
           // UP-conversions (r19): accepted under OBSERVATION hold-back.
@@ -1284,6 +1269,14 @@ object FameStream {
     * rows match the whole-history run restricted to rows with `maxLead`
     * successors; the pending rows' values would not be final (the batch
     * run nulls their leads, a stream cannot know the series ended).
+    *
+    * Job shape per batch (keyed, no chain/fishvol): the bronze write;
+    * the work frame's one window pass (hold flags and the late-row
+    * check), checkpointed eagerly; one narrow filter over that in-memory
+    * leaf for a late row; the emit write, whose plan is the key-local
+    * FAME run (one key repartition) under ONE emit filter; the carry
+    * write. The writes run concurrently on threads the batch thread
+    * creates, so every job carries this query's job group.
     */
   def runIncremental(stream: DataFrame, script: String, bronzeDir: String,
       resultDir: String, dateCol: String = "DATE",
@@ -1377,27 +1370,6 @@ object FameStream {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             upper.schema).withColumn("__EMITTED", lit(true))
       }
-      // Enforce the ingest contract instead of documenting it: any
-      // batch row dated before its key's newest carried-tail row is a
-      // late arrival the incremental form cannot evaluate correctly —
-      // fail loudly rather than emit silently-wrong output. The tail
-      // is ≤ maxLag rows per key, so this is one cheap pass per batch.
-      val late =
-        if (keysU.isEmpty) {
-          val tm = prevTail.agg(max(col(dateU))).collect()(0)
-          if (tm.isNullAt(0)) Array.empty[org.apache.spark.sql.Row]
-          else upper.where(col(dateU) < lit(tm.get(0))).limit(1).collect()
-        } else {
-          val tailMax = prevTail.groupBy(keysU.map(col): _*)
-            .agg(max(col(dateU)).as("__TAIL_MAX"))
-          upper.join(tailMax, keysU, "inner")
-            .where(col(dateU) < col("__TAIL_MAX")).limit(1).collect()
-        }
-      if (late.nonEmpty) throw new OutOfOrderIngestException(
-        s"batch $batchId contains a row older than already-processed " +
-        s"history (first offender: ${late.head}); the incremental path " +
-        "requires nondecreasing dates per key — use mode = Snapshot " +
-        "for out-of-order ingest")
       // position from the key's frontier: the last maxLead rows per key
       // are PENDING (their forward reads are incomplete) — everything
       // older is emittable. For lag-only scripts maxLead = 0 and every
@@ -1416,10 +1388,35 @@ object FameStream {
       // so an eager localCheckpoint is one tiny job that makes every
       // downstream plan hang off a leaf RDD. Values are unchanged: the
       // same rows, computed by the same plan, now computed exactly once.
-      val work = prevTail
-        .unionByName(upper.withColumn("__EMITTED", lit(false)))
+      //
+      // The same window pass enforces the ingest contract instead of
+      // documenting it: any batch row (__NEW) dated before its key's
+      // newest carried-tail row is a late arrival the incremental form
+      // cannot evaluate correctly — fail loudly rather than emit
+      // silently-wrong output, before anything of this batch is emitted.
+      val keyFrame = ord.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      val leaf = prevTail.withColumn("__NEW", lit(false))
+        .unionByName(upper.withColumn("__EMITTED", lit(false))
+          .withColumn("__NEW", lit(true)))
         .withColumn("__HOLD", row_number().over(ord) <= lit(maxLead))
+        .withColumn("__TAIL_MAX",
+          max(when(!col("__NEW"), col(dateU))).over(keyFrame))
         .localCheckpoint(true)
+      val late = leaf.where(col("__NEW") && col(dateU) < col("__TAIL_MAX"))
+        .select((if (keysU.isEmpty) upper.columns.toSeq.map(col)
+          else (keysU ++ upper.columns.filterNot(keysU.contains) :+
+            "__TAIL_MAX").map(col)): _*)
+        .limit(1).collect()
+      if (late.nonEmpty) {
+        releaseLeaf(leaf)
+        throw new OutOfOrderIngestException(
+          s"batch $batchId contains a row older than already-processed " +
+          s"history (first offender: ${late.head}); the incremental path " +
+          "requires nondecreasing dates per key — use mode = Snapshot " +
+          "for out-of-order ingest")
+      }
+      val work = leaf.drop("__NEW", "__TAIL_MAX")
       // chain scripts (r17): seed each $chain with the closed-year
       // aggregate state finalized by the previous batch (versioned like
       // the carry — replay of batch n re-reads v=n−1, idempotent), so
@@ -1514,8 +1511,8 @@ object FameStream {
           out.where(!col("__EMITTED") && !col("__HOLD"))
         else {
           // Down-conversions can create SYNTHETIC rows (the convert
-          // bridge's full-outer join, at bucket-anchor dates with no
-          // input row — null __EMITTED/__HOLD). Emit each exactly once,
+          // bridge's rows at bucket-anchor dates with no input row —
+          // null __EMITTED/__HOLD). Emit each exactly once,
           // after its bucket closes: a bucket whose anchor is at or
           // before the key's newest EMITTABLE input (__CUT_NEW) has
           // span−1 arrived rows past its anchor — closed (the hold-back
@@ -1532,11 +1529,14 @@ object FameStream {
               max(when(col("__HOLD") === false, col(dateU))).over(kw))
             .withColumn("__CUT_PREV",
               max(when(col("__EMITTED") === true, col(dateU))).over(kw))
-          scoped.where(!col("__EMITTED") && !col("__HOLD"))
-            .unionByName(scoped.where(col("__EMITTED").isNull &&
-              col(dateU) <= col("__CUT_NEW") &&
-              (col("__CUT_PREV").isNull ||
-                col(dateU) > col("__CUT_PREV"))))
+          // ONE filter: the input-row and synthetic-row predicates are
+          // disjoint (non-null vs null __EMITTED), so their OR is the
+          // union of the two filters — without running `out` twice
+          scoped.where((!col("__EMITTED") && !col("__HOLD")) ||
+              (col("__EMITTED").isNull &&
+                col(dateU) <= col("__CUT_NEW") &&
+                (col("__CUT_PREV").isNull ||
+                  col(dateU) > col("__CUT_PREV"))))
             .drop("__CUT_NEW", "__CUT_PREV")
         }
       // Independent writes of this batch — the emit below, the carry,
@@ -1548,11 +1548,24 @@ object FameStream {
       // latency apiece. Failure of any write fails the batch exactly as
       // before (Await rethrows), and checkpoint replay overwrites every
       // destination idempotently, so the commit contract is unchanged.
-      val pendingWrites =
-        scala.collection.mutable.ListBuffer.empty[java.util.concurrent.Future[_]]
-      def parallel(body: => Unit): Unit =
-        pendingWrites += batchWritePool.submit(
-          new java.util.concurrent.Callable[Unit] { def call(): Unit = body })
+      //
+      // Each write runs on a thread created HERE, by the batch thread:
+      // a new thread inherits a copy of Spark's thread-local properties
+      // (job group = this query's runId, description, job tags, SQL
+      // execution id), so its jobs belong to this query and batch —
+      // `StreamingQuery.stop()` cancels them by group and listeners
+      // attribute them correctly. A long-lived pool's threads keep the
+      // properties of whichever query created them.
+      val pendingWrites = scala.collection.mutable.ListBuffer
+        .empty[java.util.concurrent.FutureTask[Unit]]
+      def parallel(body: => Unit): Unit = {
+        val task = new java.util.concurrent.FutureTask[Unit](() => body)
+        val t = new Thread(task,
+          s"fame-batch-write-$batchId-${pendingWrites.size}")
+        t.setDaemon(true)
+        t.start()
+        pendingWrites += task
+      }
       parallel {
         emit.drop("__EMITTED", "__HOLD")
           .write.mode("overwrite").parquet(s"$resultDir/batch=$batchId")
@@ -1723,7 +1736,7 @@ object FameStream {
       }
       // this batch's consumed leaves are dead once the writes are done:
       // release their blocks now instead of at RDD GC (ADVICE r20)
-      releaseLeaf(work)
+      releaseLeaf(leaf)
       if (outGated) releaseLeaf(out)
       cachedTail.foreach(releaseLeaf)
       stateCache.foreach { case (_, (v, df)) =>

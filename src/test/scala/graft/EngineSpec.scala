@@ -107,6 +107,40 @@ class EngineSpec extends SparkSpec {
     assertSeq(column(out, "Q"), Seq(None, Some(0.2), Some(1.0 / 6)))
   }
 
+  test("kernel divisions yield NC on a zero divisor, not an ANSI " +
+      "DIVIDE_BY_ZERO: the NC factor is skipped and its link collapses to 1") {
+    // shift_pct: p = 0 in January makes February's growth factor
+    // p_Feb / p_Jan NC — skipped like any non-positive factor, so January
+    // rebuilds from the same product as February
+    val sp = FameSession.run(
+      """rev2 = rev
+        |date 2020-01-01 to 2020-04-01
+        |rev2[t] = rev2[t+1]/(1+(pct(p[t+1])/100))""".stripMargin,
+      frame(Seq("2020-01-01", "2020-02-01", "2020-03-01", "2020-04-01"),
+        "REV" -> Seq(0, 0, 0, 1000), "P" -> Seq(0, 110, 121, 133.1))).df
+    val back = 1000.0 / ((121.0 / 110) * (133.1 / 121))
+    assertSeq(column(sp, "REV2"), Seq(Some(back), Some(back),
+      Some(1000.0 / (133.1 / 121)), Some(1000.0)))
+    // chain: 2020's quantity sum is 0, so both 2021 link denominators
+    // are 0 → NC → unit link; 2022 doubles
+    val chain = FameSession.run("""set x = $chain("a", "2020")""",
+      frame(Seq("2020-06-01", "2021-06-01", "2022-06-01"),
+        "A" -> Seq(0, 20, 40), "PA" -> Seq(2, 2, 2))).df
+    assertSeq(column(chain, "X"), Seq(Some(100.0), Some(100.0), Some(200.0)))
+    // chain: a zero price zeroes the 2021 Laspeyres denominator too
+    val chainP = FameSession.run("""set x = $chain("a", "2020")""",
+      frame(Seq("2020-06-01", "2021-06-01", "2022-06-01"),
+        "A" -> Seq(10, 20, 40), "PA" -> Seq(0, 2, 2))).df
+    assertSeq(column(chainP, "X"), Seq(Some(100.0), Some(100.0), Some(200.0)))
+    // fishvol: January's zero price makes February's Laspeyres link 0/0
+    // → NC → unit link; March doubles; base 2020 average raw = 1.5
+    val fv = FameSession.run("x = fishvol_rebase({v},{p},2020)",
+      frame(Seq("2020-01-01", "2020-02-01", "2020-03-01", "2020-04-01"),
+        "V" -> Seq(10, 20, 40, 40), "P" -> Seq(0, 1, 1, 1))).df
+    assertSeq(column(fv, "X"), Seq(1.0, 1.0, 2.0, 2.0)
+      .map(r => Some(r / 1.5 * 100.0)))
+  }
+
   test("pct of a shifted series (offset pushdown, no nested windows)") {
     val in = frame(Seq("2020-01-01", "2020-02-01", "2020-03-01"),
       "V" -> Seq(100, 110, 121))
@@ -555,8 +589,8 @@ class EngineSpec extends SparkSpec {
   }
 
   test("fame_run, KEYED: a WHERE on the partition key pushes below the " +
-      "key-partitioned windows AND into both sides of the per-key " +
-      "lookup join — per-entity queries pay only for their entity") {
+      "key clustering, the key-partitioned windows and the in-frame " +
+      "per-key lookup — per-entity queries scan only their entity, once") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("famekeypush").toString
     Seq(("FR", java.sql.Date.valueOf("1995-01-01"), 4.0),
@@ -573,16 +607,14 @@ class EngineSpec extends SparkSpec {
     assert(rows(1).getDouble(3) == 5.0 / 4.0) // FR's OWN Jan level
     val plan = df.queryExecution.executedPlan.toString
       .replaceAll("\\s+", " ")
-    // the main scan prunes to the key…
+    // the scan prunes to the key…
     assert(plan.matches(".*PushedFilters: \\[[^\\]]*EqualTo\\(K,FR\\).*"),
       s"key filter not pushed to the scan:\n$plan")
-    // …and the LOOKUP side prunes to (key AND date) — the per-key
-    // materialization composes with predicate pushdown instead of
-    // rescanning every entity for one entity's rebase
-    assert(plan.matches(
-      ".*PushedFilters: \\[[^\\]]*EqualTo\\(DATE,1995-01-01\\)," +
-        " EqualTo\\(K,FR\\).*"),
-      s"lookup-side scan not pruned to (date, key):\n$plan")
+    // …and it is the ONLY scan: the per-key lookup is a key window over
+    // the same clustered frame, not a second (date, key) scan joined back
+    val scans = PlanShape.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 1, s"expected one scan, found ${scans.size}:\n$plan")
   }
 
   test("dotted series names read through every kernel (r18: chain/fishvol/" +

@@ -431,15 +431,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("plan shapes: no Expand in contamination, three shuffles in spans") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def shuffles(df: org.apache.spark.sql.DataFrame) = {
-      val p = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
-      p.collect { case e: ShuffleExchangeExec => e }
-    }
+    import PlanShape.shuffles
     val train = docFrame((1L, "a b c d e f"), (2L, "g h i j k l"))
     val bench = docFrame((9L, "a b c d e z"))
     // the round-5 rework removed the twin-countDistinct Expand: the

@@ -102,8 +102,6 @@ class OutputSpec extends SparkSpec {
   }
 
   test("bucketed tables: co-located join plans with zero exchanges") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val base = tmpDir("graft_bkt").toString
     val docsT = corpus(300)
     val meta = spark.range(300).select(col("id").as("doc_id"),
@@ -119,11 +117,7 @@ class OutputSpec extends SparkSpec {
       try {
         val joined = spark.table("bkt_docs")
           .join(spark.table("bkt_meta"), "doc_id")
-        val plan = joined.queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.initialPlan
-          case p => p
-        }
-        val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+        val exchanges = PlanShape.shuffles(joined)
         assert(exchanges.isEmpty,
           s"bucketed join still shuffles: ${exchanges.size} exchanges")
         // correctness: all rows join, values intact
@@ -139,8 +133,6 @@ class OutputSpec extends SparkSpec {
 
   test("q88: composed pipeline re-join runs through the bucketed layout " +
       "with no exchange") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     // broadcast disabled: the downstream survivors ⋈ scores join would
     // otherwise broadcast at test scale and the assert would be vacuous
@@ -149,14 +141,11 @@ class OutputSpec extends SparkSpec {
     try {
       val q = SparkEntry.queries("q88_bucketed_pipeline")(
         spark, "/root/testdata/sf0.001")
-      val plan = q.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
-      val smjs = plan.collect { case j: SortMergeJoinExec => j }
+      val smjs = PlanShape.collect(q.queryExecution.executedPlan) {
+        case j: SortMergeJoinExec => j }
       assert(smjs.nonEmpty,
         "expected a sort-merge join through the bucketed tables")
-      val under = smjs.flatMap(_.collect { case e: ShuffleExchangeExec => e })
+      val under = smjs.flatMap(j => PlanShape.shuffles(j))
       assert(under.isEmpty,
         s"composed bucketed join still shuffles: ${under.size} exchanges")
       assert(q.count() > 0)

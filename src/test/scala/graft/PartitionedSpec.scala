@@ -341,4 +341,80 @@ class PartitionedSpec extends SparkSpec {
     assert(wins.forall(_.partitionSpec.nonEmpty),
       s"found ${wins.count(_.partitionSpec.isEmpty)} keyless Window node(s)")
   }
+
+  test("key-local plans: a keyed lags + lookup + per-key scalar + m→q " +
+      "convert script shuffles exactly once, a row-local keyed script " +
+      "never, and FameStream's bucketed emit at most once") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val in = entityFrame(("V", Seq(1, 2, 3, 4), Seq(10, 20, 30, 40)))
+    val out = FameSession.run(
+      """freq m
+        |l1 = v[t-1]
+        |rel = v / v[2020-01-01]
+        |scalar m0 = ave(v)
+        |dev = v - m0
+        |vq = convert(v, q, discrete, sum)""".stripMargin,
+      in, partitionKeys = Seq("ENT")).df
+    // ONE repartition by the key; every window (lags, the lookup, the
+    // scalar, the (key, quarter) bridge) runs inside it, and nothing joins
+    assert(PlanShape.shuffles(out).size == 1,
+      s"expected one shuffle:\n${out.queryExecution.executedPlan}")
+    assert(out.queryExecution.optimizedPlan.collect { case j: Join => j }
+      .isEmpty, "a keyed key-local plan must not join")
+    assertSeq(byEntity(out, "A", "L1"), Seq(None, Some(1.0), Some(2.0), Some(3.0)))
+    assertSeq(byEntity(out, "B", "REL"), Seq(Some(1.0), Some(2.0), Some(3.0), Some(4.0)))
+    assertSeq(byEntity(out, "A", "DEV"), Seq(-1.5, -0.5, 0.5, 1.5).map(Some(_)))
+    assertSeq(byEntity(out, "B", "DEV"), Seq(-15.0, -5.0, 5.0, 15.0).map(Some(_)))
+    assertSeq(byEntity(out, "B", "V_QTRLY"), Seq(Some(60.0), None, None, Some(40.0)))
+    // the executed (final adaptive) plan keeps the single shuffle
+    out.collect()
+    assert(PlanShape.shuffles(out).size == 1)
+    assert(PlanShape.broadcasts(out.queryExecution.executedPlan).isEmpty)
+    // a row-local keyed script keeps its input partitioning
+    val local = FameSession.run("z = v * 2 + 1", in,
+      partitionKeys = Seq("ENT")).df
+    assert(PlanShape.shuffles(local).isEmpty,
+      s"row-local keyed script shuffled:\n${local.queryExecution.executedPlan}")
+
+    // FameStream's bucketed emit: every micro-batch's emit write plans
+    // at most the one key repartition (none when the work leaf already
+    // reports the key partitioning) — the emit filter, the bucket cutoff
+    // windows and the whole FAME plan run inside it
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    val base = tmpDir("famekeylocal").toString
+    val emits = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand =>
+          c.outputPath.toString }
+          .filter(_.contains("/result/batch="))
+          .foreach(p => emits.add(p -> PlanShape.shuffles(qe.executedPlan).size))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def dt(m: Int) = java.sql.Date.valueOf(f"1995-$m%02d-01")
+    val src = MemoryStream[(String, java.sql.Date, Double)]
+    spark.listenerManager.register(listener)
+    try {
+      val q = graft.streaming.FameStream.runIncremental(
+        src.toDF().toDF("K", "DATE", "REV"),
+        "freq m\nmom = pct(rev)\nrev_q = convert(rev, q, discrete, sum)",
+        s"$base/bronze", s"$base/result", partitionKeys = Seq("K"),
+        checkpointDir = Some(s"$base/ckpt"))
+      try Seq((1, 3), (4, 6), (7, 9)).foreach { case (lo, hi) =>
+        src.addData((lo to hi).flatMap(m =>
+          Seq(("A", dt(m), m * 1.0), ("B", dt(m), m * 2.0))): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (emits.size < 3 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val seen = scala.jdk.CollectionConverters.CollectionHasAsScala(emits)
+      .asScala.toSeq
+    assert(seen.size == 3, s"expected 3 emit writes, saw $seen")
+    assert(seen.forall(_._2 <= 1), s"emit plans shuffle more than once: $seen")
+  }
 }

@@ -3388,4 +3388,80 @@ class StreamingSpec extends SparkSpec {
     // batches 0 and 1 emitted; the offending batch emitted nothing
     assert(spark.read.parquet(s"$base/result").count() == 4)
   }
+
+  test("incremental FAME: every job a micro-batch starts — its parallel " +
+      "writes included — carries THIS query's runId, not an earlier " +
+      "query's") {
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def d(m: Int) = java.sql.Date.valueOf(f"1995-$m%02d-01")
+    def stream(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val base = tmpDir("famerunid").toString
+      val src = MemoryStream[(String, java.sql.Date, Double)]
+      val q = graft.streaming.FameStream.runIncremental(
+        src.toDF().toDF("K", "DATE", "REV"),
+        "freq m\nmom = pct(rev)\nrev_q = convert(rev, q, discrete, sum)",
+        s"$base/bronze", s"$base/result", partitionKeys = Seq("K"),
+        checkpointDir = Some(s"$base/ckpt"))
+      try Seq((1, 3), (4, 6)).foreach { case (lo, hi) =>
+        src.addData((lo to hi).map(m => ("A", d(m), m * 1.0)): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      q
+    }
+    // stream 1 runs (and would own any long-lived write threads) first
+    stream()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == "graft-marker") marker.countDown()
+        else seen.add(e.time -> g)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val t0 = System.currentTimeMillis()
+      val q2 = stream()
+      // one marker job from this thread: listener events arrive in
+      // order, so once the marker is seen every earlier job start is too
+      spark.sparkContext.setJobGroup("graft-marker", "marker")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      val groups = scala.jdk.CollectionConverters.CollectionHasAsScala(seen)
+        .asScala.toSeq.collect { case (t, g) if t >= t0 => g }
+      assert(groups.nonEmpty, "no stream job observed")
+      assert(groups.forall(_ == q2.runId.toString),
+        s"jobs of stream 2 under another identity: " +
+          groups.filterNot(_ == q2.runId.toString).distinct +
+          s" (stream 2 is ${q2.runId})")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("incremental FAME: the persisted-RDD count does not grow with the " +
+      "batch count") {
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    val base = tmpDir("famepersist").toString
+    def d(m: Int) = java.sql.Date.valueOf(
+      java.time.LocalDate.of(1995, 1, 1).plusMonths(m).toString)
+    val src = MemoryStream[(String, java.sql.Date, Double)]
+    val q = graft.streaming.FameStream.runIncremental(
+      src.toDF().toDF("K", "DATE", "REV"),
+      "freq m\nmom = pct(rev)\nrev_q = convert(rev, q, discrete, sum)",
+      s"$base/bronze", s"$base/result", partitionKeys = Seq("K"),
+      checkpointDir = Some(s"$base/ckpt"))
+    val counts = try (0 until 8).map { b =>
+      src.addData(Seq(("A", d(2 * b), 1.0 + b), ("A", d(2 * b + 1), 2.0 + b),
+        ("B", d(2 * b), 3.0 + b)): _*)
+      q.processAllAvailable()
+      spark.sparkContext.getPersistentRDDs.size
+    } finally q.stop()
+    // every batch releases the leaves it consumed and hands one carry
+    // leaf on: after the first batches the count is flat
+    assert(counts.drop(2).forall(_ <= counts(1)), counts.toString)
+  }
 }
